@@ -240,15 +240,6 @@ def category_entities(
     )
 
 
-def disambiguation_pages(pages: DataFrame, edges: DataFrame,
-                         root: str = "Begriffsklärung") -> DataFrame:
-    """The reference's ``get_disambiguation`` (entities.py:191-193 →
-    get_pages): member pages below the disambiguation root category.
-    Loaded-but-unused in the reference's own tagging path; provided for
-    API parity so a reference user can reproduce every entry point."""
-    return category_member_pages(pages, descendant_edges(edges, root))
-
-
 def category_member_pages(pages: DataFrame, cats: DataFrame,
                           drop_prefix: str = "Liste_") -> DataFrame:
     """The reference's get_category_pages (entities.py:51-67): ns-0 pages

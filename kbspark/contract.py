@@ -18,6 +18,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kbspark.corpus import scan
+
 CONTRACT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 CONTRACT_ORACLES: dict[str, str] = {}
 
@@ -112,7 +114,7 @@ def _load_views(spark: SparkSession, sf_dir: str) -> None:
         except Exception:
             pass  # dropped/broken view -> fall through and re-register
     for t in _TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        scan(spark, sf_dir, t).createOrReplaceTempView(t)
     try:
         fps = {t: _plan_fingerprint(spark, t) for t in _TABLES}
     except Exception:

@@ -22,6 +22,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
+from kbspark.session import memo
+
 # ---------------------------------------------------------------------------
 # 1. Seeded synthetic wiki corpus
 # ---------------------------------------------------------------------------
@@ -168,8 +170,7 @@ def synth_corpus_df(spark, n_pages: int, seed: int = 42,
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def spread_small_scan(df, spark, target: int | None = None,
-                      min_bytes_per_partition: int | None = None):
+def spread_small_scan(df, spark):
     """Repartition a SMALL scan across the session's cores — and ONLY a
     small one (optimization guide §2.2/§6): a parquet file under
     ``maxPartitionBytes`` arrives as ONE split, so every narrow map stage
@@ -179,48 +180,14 @@ def spread_small_scan(df, spark, target: int | None = None,
 
     Scale-adaptive by construction, not tuned to the bench: the gate
     reads Catalyst's size estimate for the plan (driver-side statistics,
-    no job) and leaves any input big enough to already split into >=
-    ``target`` scan partitions untouched — at cluster scale (the 100-TB
-    regime) this is a structural no-op, while a dictionary-sized input
-    pays one trivial shuffle of itself to unlock full-width map
-    parallelism. ``target`` defaults to the session's default
-    parallelism (cores), never a constant.
-
-    ``min_bytes_per_partition``: scale the fan-out with the data instead
-    of jumping straight to ``target`` — the effective target becomes
-    ``clamp(size / min_bytes_per_partition, 1, target)``. Right for
-    mid-pipeline re-spreads ahead of a python stage whose DOWNSTREAM
-    consumers are many small shuffle stages: a tiny input stays at 1-4
-    partitions (no 32-task scheduling amplification through the rest of
-    the plan) while a working-set-sized input still fans out to the full
-    core count (r06 interleaved bisect on the frame-dim tagged chain).
-
-    CAVEAT (r06 review): Catalyst's non-CBO size estimate is only
-    scan-accurate; a JOIN's estimate is the product of its children and
-    blows past any gate. Gate on a LEAF-adjacent plan (the scan, a
-    python stage directly over it) and, to re-spread a join output,
-    compute the target from the pre-join side via ``spread_target`` and
-    repartition the join output with it explicitly."""
-    n = spread_target(
-        df, spark, target=target,
-        min_bytes_per_partition=min_bytes_per_partition,
-    )
-    return df.repartition(n) if n else df
-
-
-def spread_target(df, spark, target: int | None = None,
-                  min_bytes_per_partition: int | None = None) -> int | None:
-    """The partition-count decision behind ``spread_small_scan``,
-    exposed so a caller can gate on one plan (whose Catalyst estimate
-    is trustworthy — a scan or a narrow stage over it) and apply the
-    repartition to another (e.g. a join output whose own estimate is a
-    meaningless product of child sizes). Returns None when no
-    repartition is warranted: the input is cluster-sized (size gate),
-    already splits into a meaningful fraction of ``target`` scan
-    partitions (>= half — a shuffle that adds < 2x parallelism is pure
-    cost, r06 review), or is too small to spread under
-    ``min_bytes_per_partition``."""
-    target = target or spark.sparkContext.defaultParallelism
+    no job) and leaves any input that already splits into at least half
+    the session's default parallelism untouched — a shuffle that adds
+    < 2x parallelism is pure cost (r06 review). At cluster scale (the
+    100-TB regime) this is a structural no-op, while a dictionary-sized
+    input pays one trivial shuffle of itself to unlock full-width map
+    parallelism. Gate on a scan or a narrow stage over it: Catalyst's
+    non-CBO size estimate is only scan-accurate."""
+    target = spark.sparkContext.defaultParallelism
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -235,25 +202,33 @@ def spread_target(df, spark, target: int | None = None,
         except Exception:
             maxpb = 128 * 1024 * 1024
     except Exception:  # size estimate unavailable (e.g. Connect) — leave
-        return None
-    # natural split count the scan would already get; spreading is only
-    # worth a full-data shuffle when it at least doubles parallelism
-    est_splits = size // maxpb + 1
-    if est_splits * 2 >= target:
-        return None
-    if min_bytes_per_partition:
-        n = max(1, min(target, size // min_bytes_per_partition))
-        if n <= 1:
-            return None
-        return n
-    return target
+        return df
+    # natural split count the scan would already get
+    if (size // maxpb + 1) * 2 >= target:
+        return df
+    return df.repartition(target)
+
+
+def table_path(sf_dir: str, table: str) -> str:
+    """Where the driver keeps ``table``: one ``{table}.parquet`` per
+    table under ``sf_dir``."""
+    return f"{sf_dir}/{table}.parquet"
+
+
+def scan(spark, sf_dir: str, table: str, spread: bool = False):
+    """The one reader of the driver's tables. ``spread=True`` applies
+    ``spread_small_scan`` to the scan — right ahead of wide map stages
+    (clean/tokenize passes, the vocabulary distinct); wrong for a
+    many-small-stage consumer (see ``pages_from_documents``)."""
+    df = spark.read.parquet(table_path(sf_dir, table))
+    return spread_small_scan(df, spark) if spread else df
 
 
 def _doc_to_markup(doc_id: int, text: str) -> str:
     """Inject wiki markup into a document deterministically (pure function
     of doc_id + token position; no RNG, no collect — safe to run
-    distributed)."""
-    words = text.split()
+    distributed). A null text is treated as empty."""
+    words = text.split() if isinstance(text, str) else []
     out = []
     for i, w in enumerate(words):
         h = (doc_id * 1_000_003 + i * 101) % 17
@@ -283,9 +258,7 @@ def pages_from_documents(spark, sf_dir: str, spread: bool = True):
     task fan-out adds scheduling overhead to every intermediate
     join/fold stage for little map-side gain (r06 interleaved bisect:
     the frames chain ran ~1.4s faster with the scan left serial)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if spread:
-        docs = spread_small_scan(docs, spark)
+    docs = scan(spark, sf_dir, "documents", spread=spread)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         epoch = _dt.datetime(2024, 1, 1)
@@ -314,42 +287,16 @@ def pages_from_documents(spark, sf_dir: str, spread: bool = True):
 #: DataFrame dim path (``dim_frames_from_documents`` + relational J5).
 DIM_COLLECT_CAP = 500_000
 
-#: per-process memo of collected dims, keyed by sf_dir (the driver runs
-#: many contract queries in one process; /root/testdata is immutable, so
-#: re-deriving the same vocab dictionary per query is pure waste). The
-#: over-cap outcome is memoized too (as None) so repeated frame-path runs
-#: don't re-execute the limit(cap+1) probe every invocation.
-_DIM_CACHE: dict[
-    tuple[str, int], tuple[dict[str, str], dict[str, str]] | None
-] = {}
-
-
-#: per-(session, sf_dir) persisted whitespace-token table shared by the
-#: dedup families (VERDICT r02 #5: t_lsh and t_simhash each re-tokenized
-#: the corpus). Deliberately NOT release_tracked — it is a cross-query
-#: memo like jobs._TAGGED_CACHE, bounded to the most recent entry.
-_WORDS_CACHE: dict[tuple, object] = {}
-
-
 def words_from_documents(spark, sf_dir: str):
     """(doc_id, _w) token table over documents.parquet, tokenized once
-    per session and persisted (kbspark.textops.words_table shape)."""
+    per session and persisted (kbspark.textops.words_table shape) — the
+    dedup families share it (VERDICT r02 #5: t_lsh and t_simhash each
+    re-tokenized the corpus)."""
     from kbspark.textops import words_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WORDS_CACHE:
-        return _WORDS_CACHE[key]
-    docs = spread_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), spark
-    )
-    wdf = words_table(docs).persist()
-    while _WORDS_CACHE:
-        try:
-            _WORDS_CACHE.popitem()[1].unpersist()
-        except Exception:
-            pass  # entry from a stopped session — nothing to release
-    _WORDS_CACHE[key] = wdf
-    return wdf
+    return memo("words", sf_dir, lambda: words_table(
+        scan(spark, sf_dir, "documents", spread=True)
+    ).persist())
 
 
 def _entity_type_of(title: str) -> str:
@@ -366,8 +313,10 @@ def vocab_titles(spark, sf_dir: str):
     words memo (r06): the memo's repartition + cache materialization is
     pure overhead for a vocab-only consumer (A/B: 0.33s vs 0.54-0.75s
     cold at sf0.1), the split itself is a trivial fraction of the scan,
-    and the RESULT is memoized anyway (_DIM_CACHE / _DIMFRAME_CACHE) so
-    a session derives the vocabulary at most once per dim path. The
+    and the RESULT is memoized anyway (the ``dims`` / ``dim_frames``
+    memos) so a session derives the vocabulary at most once per dim
+    path. The scan is spread: the distinct's map side is the whole
+    corpus pass, and a single-split scan ran it in one task. The
     dedup families keep sharing ``words_from_documents``; the token
     DEFINITION stays single-sourced in ``textops.words_table`` (r06
     review: an inline re-split could silently diverge from the dedup
@@ -382,7 +331,7 @@ def vocab_titles(spark, sf_dir: str):
     # instead of one per token occurrence. Values identical (same set);
     # A/B parity-exact, row-reduction grows with per-doc repetition at
     # corpus scale.
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = scan(spark, sf_dir, "documents", spread=True)
     arr = F.array_distinct(
         F.transform(
             F.filter(F.col("_w"), lambda t: F.length(t) >= 4),
@@ -390,17 +339,6 @@ def vocab_titles(spark, sf_dir: str):
         )
     )
     return words_table(docs).select(F.explode(arr).alias("title")).distinct()
-
-
-#: per-(session, sf_dir) persisted DataFrame dims for the frame path —
-#: the frame pipelines reference the entity dim in up to ~6 join
-#: subtrees per query (resolve precedence joins, triple families, alias
-#: frames); without materialization EVERY reference re-executes the full
-#: words-scan -> explode -> distinct -> TYPE pipeline (r06 plan audit:
-#: 21 parquet scans / 42 MapInPandas nodes in one kg_el_frames plan).
-#: Same lifecycle as _WORDS_CACHE: bounded to the most recent entry,
-#: cleared by session.reset_memos.
-_DIMFRAME_CACHE: dict[tuple, tuple] = {}
 
 
 def dim_frames_from_documents(spark, sf_dir: str):
@@ -411,17 +349,15 @@ def dim_frames_from_documents(spark, sf_dir: str):
     byte-sum semantics stay identical to the dict path.
 
     The entity dim is persisted and memoized per (session, sf_dir):
-    every frame-path query joins it several times, and at 100 TB
+    every frame-path query joins it in up to ~6 subtrees, each of which
+    would otherwise re-run the whole vocabulary pipeline (r06 plan
+    audit: 21 parquet scans in one kg_el_frames plan), and at 100 TB
     materializing the corpus-derived dictionary once (the reference
     writes its dictionary before tagging, ner.py:254-256) beats
     re-deriving it per join subtree by the width of the corpus scan."""
     from pyspark.sql import functions as F
 
     from kbspark.triples import qid_col
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DIMFRAME_CACHE:
-        return _DIMFRAME_CACHE[key]
 
     def typed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -432,20 +368,17 @@ def dim_frames_from_documents(spark, sf_dir: str):
                 }
             )
 
-    ent = vocab_titles(spark, sf_dir).mapInPandas(
-        typed, schema="page_title string, TYPE string"
-    ).withColumn("QID", qid_col()).persist()
-    red = ent.select(
-        F.concat(F.col("page_title"), F.lit("_redir")).alias("alias"),
-        "page_title",
-    )
-    while _DIMFRAME_CACHE:
-        try:
-            _DIMFRAME_CACHE.popitem()[1][0].unpersist()
-        except Exception:
-            pass  # entry from a stopped session — nothing to release
-    _DIMFRAME_CACHE[key] = (ent, red)
-    return ent, red
+    def build():
+        ent = vocab_titles(spark, sf_dir).mapInPandas(
+            typed, schema="page_title string, TYPE string"
+        ).withColumn("QID", qid_col()).persist()
+        red = ent.select(
+            F.concat(F.col("page_title"), F.lit("_redir")).alias("alias"),
+            "page_title",
+        )
+        return ent, red
+
+    return memo("dim_frames", sf_dir, build)
 
 
 def try_dims_from_documents(
@@ -454,21 +387,23 @@ def try_dims_from_documents(
     """Dict dims if the vocabulary fits under ``max_rows``, else None
     (caller switches to ``dim_frames_from_documents``). One Spark job:
     ``limit(max_rows + 1)`` bounds driver memory — we never collect an
-    unbounded vocabulary just to discover it was too big."""
+    unbounded vocabulary just to discover it was too big. Memoized per
+    (session, sf_dir, max_rows), the over-cap ``None`` included, so
+    repeated frame-path runs don't re-execute the probe."""
     if max_rows is None:
         max_rows = DIM_COLLECT_CAP
-    key = (sf_dir, max_rows)
-    if key in _DIM_CACHE:
-        return _DIM_CACHE[key]
-    rows = vocab_titles(spark, sf_dir).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        _DIM_CACHE[key] = None
-        return None
-    titles = sorted(r["title"] for r in rows)
-    entity_types = {t: _entity_type_of(t) for t in titles}
-    redirect_targets = {f"{t}_redir": t for t in titles}
-    _DIM_CACHE[key] = (entity_types, redirect_targets)
-    return entity_types, redirect_targets
+
+    def build():
+        rows = vocab_titles(spark, sf_dir).limit(max_rows + 1).collect()
+        if len(rows) > max_rows:
+            return None
+        titles = sorted(r["title"] for r in rows)
+        return (
+            {t: _entity_type_of(t) for t in titles},
+            {f"{t}_redir": t for t in titles},
+        )
+
+    return memo("dims", (sf_dir, max_rows), build)
 
 
 def dims_from_documents(spark, sf_dir: str) -> tuple[dict[str, str], dict[str, str]]:

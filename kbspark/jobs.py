@@ -24,6 +24,7 @@ from kbspark.corpus import (
     dim_frames_from_documents,
     dims_from_documents,
     pages_from_documents,
+    scan,
     try_dims_from_documents,
 )
 from kbspark.extract import (
@@ -33,7 +34,7 @@ from kbspark.extract import (
     mention_stage_raw,
     resolve_mentions_frames,
 )
-from kbspark.session import persist_tracked, pin_session_conf
+from kbspark.session import memo, persist_tracked, pin_session_conf
 from kbspark.triples import build_triples, build_triples_from_frames
 
 
@@ -72,34 +73,15 @@ def flagship_triples(spark: SparkSession, sf_dir: str,
     return build_triples(spark, mentions, entity_types, redirect_targets)
 
 
-#: per-(session, sf_dir) materialized tagged table — the reference's own
-#: dataflow: `tagged` is written ONCE (ner.py:267-288) and every consumer
-#: (stats, EL) reads the materialization instead of re-running extraction.
-#: Bounded (ADVICE r02): only the most recent entries stay pinned; an
-#: evicted table is unpersisted (recompute-safe — everything upstream is
-#: deterministic).
-_TAGGED_CACHE: dict[tuple, DataFrame] = {}
-_TAGGED_CACHE_MAX = 2
-
-
-def _tagged_cache_put(key: tuple, tagged: DataFrame) -> None:
-    _TAGGED_CACHE[key] = tagged
-    while len(_TAGGED_CACHE) > _TAGGED_CACHE_MAX:
-        old_key = next(iter(_TAGGED_CACHE))
-        old = _TAGGED_CACHE.pop(old_key)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
 def tagged_table(spark: SparkSession, sf_dir: str,
-                 use_cache: bool = True,
                  dim_collect_cap: int | None = None,
                  pages_df: DataFrame | None = None) -> DataFrame:
     """documents → pages → per-sentence BIO-tagged table (the reference's
     `tagged` table with typed nested arrays, ner.py:196-197), persisted
-    once per session like the reference's materialized SQLite table.
+    once per session like the reference's materialized SQLite table:
+    `tagged` is written ONCE (ner.py:267-288) and every consumer (stats,
+    EL) reads the materialization through the ``tagged`` memo instead of
+    re-running extraction.
 
     Dim strategy is size-gated like the flagship (VERDICT r02 #2): a
     dictionary-sized vocabulary annotates with broadcast dicts; above the
@@ -107,42 +89,35 @@ def tagged_table(spark: SparkSession, sf_dir: str,
     per-page map built by relational joins (``annotate_stage_frames``).
 
     ``pages_df`` overrides the corpus (dims still derive from ``sf_dir``);
-    an overridden corpus is never cached — the memo is keyed on sf_dir."""
+    an overridden corpus bypasses the memo, which is keyed on sf_dir."""
     pin_session_conf(spark)
-    if pages_df is not None:
-        use_cache = False
-    key = (spark.sparkContext.applicationId, sf_dir, dim_collect_cap)
-    if use_cache and key in _TAGGED_CACHE:
-        # refresh recency (ADVICE r03): eviction pops the FRONT of the
-        # dict, so a hit must move its key to the back for true LRU —
-        # otherwise alternating three keys evicts the hottest table
-        _TAGGED_CACHE[key] = _TAGGED_CACHE.pop(key)
-        return _TAGGED_CACHE[key]
     kw = {} if dim_collect_cap is None else {"max_rows": dim_collect_cap}
-    dims = try_dims_from_documents(spark, sf_dir, **kw)
-    if dims is None:
-        # frames chain: leave the scan serial — the chain is many small
-        # stages and wide fan-out costs more in scheduling than its
-        # python passes gain (see pages_from_documents docstring); the
-        # tokenize pass inherits the cleaned side's partitioning
-        # through the broadcast maps join (annotate_stage_frames)
-        pages = pages_df if pages_df is not None else pages_from_documents(
-            spark, sf_dir, spread=False
-        )
-        entity_dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
-        tagged = annotate_stage_frames(
-            pages, spark, entity_dim, redirect_dim, broadcast_dims=False
-        )
-    else:
+
+    def build() -> DataFrame:
+        dims = try_dims_from_documents(spark, sf_dir, **kw)
+        if dims is None:
+            # frames chain: leave the scan serial — the chain is many
+            # small stages and wide fan-out costs more in scheduling than
+            # its python passes gain (see pages_from_documents docstring);
+            # the tokenize pass inherits the cleaned side's partitioning
+            # through the broadcast maps join (annotate_stage_frames)
+            pages = pages_df if pages_df is not None else (
+                pages_from_documents(spark, sf_dir, spread=False)
+            )
+            entity_dim, redirect_dim = dim_frames_from_documents(spark, sf_dir)
+            return annotate_stage_frames(
+                pages, spark, entity_dim, redirect_dim, broadcast_dims=False
+            )
         pages = pages_df if pages_df is not None else pages_from_documents(
             spark, sf_dir
         )
         entity_types, redirect_targets = dims
-        tagged = annotate_stage(pages, spark, entity_types, redirect_targets)
-    if use_cache:
-        tagged = tagged.persist()
-        _tagged_cache_put(key, tagged)
-    return tagged
+        return annotate_stage(pages, spark, entity_types, redirect_targets)
+
+    if pages_df is not None:
+        return build()
+    return memo("tagged", (sf_dir, dim_collect_cap),
+                lambda: build().persist())
 
 
 def entity_linking_job(spark: SparkSession, sf_dir: str,
@@ -247,7 +222,7 @@ def dedup_job(spark: SparkSession, sf_dir: str, method: str = "minhash-lsh",
     from pyspark.sql import functions as F
 
     pin_session_conf(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = scan(spark, sf_dir, "documents")
     if method == "exact":
         fp = textops.content_fingerprint("text")
         out = (

@@ -524,6 +524,7 @@ def g_stream_incremental(spark, sf_dir):
     """§2.G: the same windowed aggregation executed through Structured
     Streaming (AvailableNow-style incremental over the static source) —
     must equal the batch result exactly."""
+    from kbspark.corpus import table_path
     from kbspark.streaming import run_incremental
 
     def agg(stream):
@@ -534,7 +535,7 @@ def g_stream_incremental(spark, sf_dir):
             "event_type",
         ).agg(F.count("*").alias("n"))
 
-    return run_incremental(spark, f"{sf_dir}/events.parquet", agg)
+    return run_incremental(spark, table_path(sf_dir, "events"), agg)
 
 
 # ---------------------------------------------------------------------------

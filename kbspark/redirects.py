@@ -130,13 +130,3 @@ def redirect_dict(redirects: DataFrame,
             redirects, ["rd_from_title", "rd_title"], max_rows
         )
     }
-
-
-def entity_type_dict(entities: DataFrame,
-                     max_rows: int = 10_000_000) -> dict[str, str]:
-    """Collect the (page_title -> TYPE) map for broadcast. Bounded like
-    ``redirect_dict``."""
-    return {
-        row["page_title"]: row["TYPE"]
-        for row in _bounded_rows(entities, ["page_title", "TYPE"], max_rows)
-    }

@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import OrderedDict
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -80,13 +82,74 @@ def release_tracked() -> int:
     released."""
     n = 0
     while _TRACKED_PERSISTS:
-        df = _TRACKED_PERSISTS.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already gone — nothing to release
-            pass
+        n += _unpersist(_TRACKED_PERSISTS.pop())
     return n
+
+
+def _unpersist(value) -> int:
+    """Unpersist a memo value or tracked DataFrame, walking tuples (the
+    frame path memoizes an ``(entity_dim, redirect_dim)`` pair); returns
+    how many persisted DataFrames were released. Values that hold no
+    cached plan (dicts, ``None``, an unpersisted frame) release nothing."""
+    if isinstance(value, tuple):
+        return sum(_unpersist(v) for v in value)
+    if not getattr(value, "is_cached", False):
+        return 0
+    try:
+        value.unpersist()
+    except Exception:  # session already gone — nothing to release
+        return 0
+    return 1
+
+
+#: The cross-query memo registry: kind -> LRU of ``(applicationId, key)
+#: -> value``. The reference writes its dictionary and its ``tagged``
+#: table once and reads them back everywhere (ner.py:254-256,
+#: ner.py:267-288); a contract session runs ~50 queries in one process,
+#: so re-deriving them per query is pure waste. Unlike tracked persists
+#: these survive ``release_tracked``. Bounded per kind (ADVICE r02): an
+#: evicted value is unpersisted — recompute-safe, everything memoized is
+#: deterministic.
+_MEMOS: dict[str, OrderedDict] = {}
+_MEMO_STATS: dict[str, dict[str, int]] = {}
+_MEMO_MAX_PER_KIND = 2
+_MEMO_LOCK = threading.Lock()
+
+
+def memo(kind: str, key, build):
+    """``build()``'s value memoized under ``(kind, applicationId, key)``.
+
+    A hit moves its key to the back of its kind's LRU (ADVICE r03: with
+    front eviction, alternating three keys would otherwise evict the
+    hottest value); a miss runs ``build()`` outside the lock and evicts
+    — and unpersists — the least recently used entry beyond
+    ``_MEMO_MAX_PER_KIND``. A ``None`` result is memoized like any other
+    value (the over-cap dims probe relies on that)."""
+    sc = SparkContext._active_spark_context
+    full = (None if sc is None else sc.applicationId, key)
+    with _MEMO_LOCK:
+        entries = _MEMOS.setdefault(kind, OrderedDict())
+        stats = _MEMO_STATS.setdefault(kind, {"hits": 0, "misses": 0})
+        if full in entries:
+            stats["hits"] += 1
+            entries.move_to_end(full)
+            return entries[full]
+        stats["misses"] += 1
+    value = build()
+    with _MEMO_LOCK:
+        entries[full] = value
+        evicted = []
+        while len(entries) > _MEMO_MAX_PER_KIND:
+            evicted.append(entries.popitem(last=False)[1])
+    for old in evicted:
+        _unpersist(old)
+    return value
+
+
+def memo_stats() -> dict[str, dict[str, int]]:
+    """Hit and miss counts per memo kind since the process started."""
+    with _MEMO_LOCK:
+        return {kind: dict(s) for kind, s in _MEMO_STATS.items()}
 
 
 _CHECKPOINT_LOCK = threading.Lock()
@@ -139,40 +202,19 @@ def release_rdd_ids(spark, ids) -> int:
 
 
 def reset_memos() -> int:
-    """Clear every cross-query memo (jobs._TAGGED_CACHE, corpus._DIM_CACHE,
-    corpus._WORDS_CACHE) plus tracked persists, unpersisting cached tables.
+    """Clear every entry of the memo registry (``memo``) plus tracked
+    persists, unpersisting cached tables.
 
     Benchmarks call this between repeated runs of one query so best-of-N
     separates co-tenant noise from plan regressions WITHOUT aliasing warm
     memo hits into the "first run" number (VERDICT r03 #1). Everything
     memoized is deterministic, so clearing is never a correctness event.
     Returns how many persisted tables were released."""
-    from kbspark import corpus, jobs
-
-    n = 0
-    for df in list(jobs._TAGGED_CACHE.values()):
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    jobs._TAGGED_CACHE.clear()
-    for df in list(corpus._WORDS_CACHE.values()):
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    corpus._WORDS_CACHE.clear()
-    for ent, _red in list(corpus._DIMFRAME_CACHE.values()):
-        try:
-            ent.unpersist()
-            n += 1
-        except Exception:
-            pass
-    corpus._DIMFRAME_CACHE.clear()
-    corpus._DIM_CACHE.clear()
-    return n + release_tracked()
+    with _MEMO_LOCK:
+        values = [v for entries in _MEMOS.values() for v in entries.values()]
+        for entries in _MEMOS.values():
+            entries.clear()
+    return sum(_unpersist(v) for v in values) + release_tracked()
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:

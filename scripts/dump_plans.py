@@ -28,7 +28,7 @@ def main() -> None:
     spark = get_spark(app="kbspark-plans", cpus=cpus, shuffle_partitions=cpus)
 
     import __spark_entry__ as entry_mod
-    from kbspark.corpus import words_from_documents
+    from kbspark.corpus import scan, words_from_documents
     from kbspark.jobs import entity_linking_job
     from kbspark.textops import lsh_near_dup_pairs, simhash_near_dups
 
@@ -37,11 +37,11 @@ def main() -> None:
         sp, sf, dim_collect_cap=1
     )
     queries["t_lsh_near_dup_pairs"] = lambda sp, sf: lsh_near_dup_pairs(
-        sp.read.parquet(f"{sf}/documents.parquet"), n_hashes=8, n_bands=2,
+        scan(sp, sf, "documents"), n_hashes=8, n_bands=2,
         threshold=0.5, words=words_from_documents(sp, sf),
     )
     queries["t_simhash_near_dups"] = lambda sp, sf: simhash_near_dups(
-        sp.read.parquet(f"{sf}/documents.parquet"), max_hamming=7,
+        scan(sp, sf, "documents"), max_hamming=7,
         n_blocks=8, words=words_from_documents(sp, sf),
     )
 

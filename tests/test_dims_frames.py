@@ -103,14 +103,15 @@ def test_el_job_frame_path_matches_dict_path(spark, sf001_dir):
     the exact EL table of the dict path — the whole tagged -> spans ->
     aliases -> scoring chain through DataFrame dims."""
     import kbspark.jobs as jobs
+    from kbspark.session import reset_memos
 
-    jobs._TAGGED_CACHE.clear()
+    reset_memos()
     via_dict = _rows(jobs.entity_linking_job(spark, sf001_dir))
-    jobs._TAGGED_CACHE.clear()
+    reset_memos()
     via_frames = _rows(
         jobs.entity_linking_job(spark, sf001_dir, dim_collect_cap=0)
     )
-    jobs._TAGGED_CACHE.clear()
+    reset_memos()
     assert via_frames == via_dict
     assert len(via_frames) > 0
 

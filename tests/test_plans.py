@@ -129,6 +129,53 @@ def test_no_row_at_a_time_python_udfs():
     assert not offenders, offenders
 
 
+def test_driver_tables_read_only_through_scan():
+    """One reader of the driver's tables: outside ``corpus.scan`` and the
+    layout function it uses (``corpus.table_path``), no package source
+    builds a ``{dir}/<table>.parquet`` path, names a driver table's
+    parquet file in a string, or hands an f-string path to
+    ``read.parquet``."""
+    import ast
+    import pathlib
+
+    from kbspark.contract import _TABLES
+
+    patterns = [
+        re.compile(r"\{[^}]*\}/[^\"'\s]*\.parquet"),
+        re.compile(r"[\"'/](?:%s)\.parquet[\"']" % "|".join(_TABLES)),
+        re.compile(r"read\.parquet\(\s*f[\"']"),
+    ]
+    pkg = pathlib.Path(__file__).parent.parent / "kbspark"
+    offenders = []
+    for path in pkg.glob("*.py"):
+        src = path.read_text()
+        if path.name == "corpus.py":
+            for node in ast.parse(src).body:
+                if isinstance(node, ast.FunctionDef) and node.name in (
+                    "scan", "table_path"
+                ):
+                    src = src.replace(ast.get_source_segment(src, node), "")
+        offenders += [
+            (path.name, m.group()) for pat in patterns
+            for m in pat.finditer(src)
+        ]
+    assert not offenders, offenders
+
+
+def test_vocab_titles_scan_is_spread(spark, sf01_dir):
+    """The dims collect derives from a single-split documents scan; it
+    must run on every core, so the plan round-robins the scan itself
+    before the vocabulary's map side."""
+    from kbspark.corpus import vocab_titles
+
+    plan = _plan(vocab_titles(spark, sf01_dir))
+    assert re.search(
+        r"Exchange RoundRobinPartitioning\(\d+\)[^\n]*\n"
+        r"\s*\+- FileScan parquet [^\n]*documents\.parquet",
+        plan,
+    ), plan
+
+
 def test_clean_stage_plan_is_arrow_eval(spark):
     from kbspark.extract import clean_pages
 
